@@ -78,15 +78,27 @@ object Pipelines {
     * both version trees, file-level drift, then per-matched-pair row/
     * schema drift for pairs whose extensions agree (csv-csv or
     * xlsx-xlsx, `:120-122`). Returns (file_diff, pair_report).
+    *
+    * The pairs are compared concurrently (see [[SchemaDiff.pairCompare]]):
+    * `readFn` is called from several threads at once and must be
+    * thread-safe, as `spark.read` and [[graft.sources.Xlsx.read]] are.
     */
   def assessChanges(spark: SparkSession, oldDir: String, newDir: String,
                     readFn: String => DataFrame): (DataFrame, DataFrame) = {
     val o = FileManifest.list(spark, oldDir, "old")
     val n = FileManifest.list(spark, newDir, "new")
-    val fileDiff = FileManifest.fileDiff(o, n)
+    (FileManifest.fileDiff(o, n),
+      SchemaDiff.pairCompare(spark, matchedPairs(o, n), readFn))
+  }
+
+  /** The (std_name, old_path, new_path) pairs [[assessChanges]] compares:
+    * matched on both sides, with agreeing extensions.
+    */
+  private[graft] def matchedPairs(oldM: DataFrame,
+                                  newM: DataFrame): Seq[(String, String, String)] = {
     val csv = "(?i).*\\.csv$"
     val xlsx = "(?i).*\\.xlsx$"
-    val pairs = FileManifest.joinVersions(o, n)
+    FileManifest.joinVersions(oldM, newM)
       .filter(col("old_path").isNotNull && col("new_path").isNotNull)
       .filter(
         (col("old_path").rlike(csv) && col("new_path").rlike(csv)) ||
@@ -94,7 +106,6 @@ object Pipelines {
       .select("std_name", "old_path", "new_path")
       .collect() // metadata-scale: one row per matched FILE, not per record
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
-    (fileDiff, SchemaDiff.pairCompare(spark, pairs, readFn))
   }
 
   /** EP3 — the country/species diff (`assess_changes.qmd:265-353`):
@@ -102,21 +113,29 @@ object Pipelines {
     * directions. Returns a long frame (entity, direction, value) —
     * `direction` = "removed" (old-only) / "added" (new-only), sorted,
     * matching the report's `setdiff` + `sort` (`:335-338,348-351,366,375`).
+    *
+    * One grouped aggregate instead of four `except`s: each side explodes
+    * into (entity, value, side) rows, the union groups on (entity, value),
+    * and a group seen on one side only is a diff row. Grouping keys compare
+    * null-safely, so a null value diffs exactly as `except` does.
     */
   def countrySpeciesDiff(spark: SparkSession, oldProd: DataFrame,
                          newProd: DataFrame): DataFrame = {
-    val oldC = CleanProd.clean(oldProd)
-    val newC = CleanProd.clean(newProd)
-    def diff(entity: String, colName: String): DataFrame = {
-      val o = oldC.select(col(colName).as("value")).distinct()
-      val n = newC.select(col(colName).as("value")).distinct()
-      o.except(n).select(lit(entity).as("entity"),
-        lit("removed").as("direction"), col("value"))
-        .unionByName(n.except(o).select(lit(entity).as("entity"),
-          lit("added").as("direction"), col("value")))
-    }
-    diff("country", "country_iso3_alpha")
-      .unionByName(diff("species", "SciName"))
+    def sides(prod: DataFrame, side: Int): DataFrame =
+      CleanProd.clean(prod).select(lit(side).as("side"), explode(array(
+        struct(lit("country").as("entity"), col("country_iso3_alpha").as("value")),
+        struct(lit("species").as("entity"), col("SciName").as("value"))))
+        .as("e"))
+        .select(col("e.entity").as("entity"), col("e.value").as("value"),
+          col("side"))
+    sides(oldProd, 0).unionByName(sides(newProd, 1))
+      .groupBy("entity", "value")
+      .agg(min("side").as("lo"), max("side").as("hi"))
+      .filter(col("lo") === col("hi"))
+      .select(col("entity"),
+        when(col("lo") === 0, lit("removed")).otherwise(lit("added"))
+          .as("direction"),
+        col("value"))
       .orderBy("entity", "direction", "value")
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
 /** Schema-introspection operators — the reference's signature capability
   * (SURVEY.md §2.8): reify a StructType into data, diff two schemas, diff
   * row counts, and orchestrate the per-pair compare of
@@ -53,21 +55,37 @@ object SchemaDiff {
     (o, n, n - o)
   }
 
+  /** One [[pairCompare]] row. */
+  private type PairRow = (String, Long, Long, Long, Array[String],
+    Array[String], Array[String])
+
   /** Per-pair compare orchestration (`pair_compare`,
-    * `assess_changes.qmd:127-179`): a driver loop over matched (old, new)
-    * path pairs — metadata-scale by design (the loop iterates file pairs,
-    * each iteration launches distributed reads; no data is collected).
-    * `readFn` opens a path as a DataFrame (csv/parquet/...).
+    * `assess_changes.qmd:127-179`): metadata-scale by design (the loop
+    * iterates matched file pairs, each launches distributed reads, no
+    * data is collected). `readFn` opens a path as a DataFrame
+    * (csv/parquet/...).
     *
     * Schema drift is computed directly on the driver-side StructTypes —
-    * schemas are metadata already resident on the driver, so round 2's
-    * three filter+collect Spark jobs per pair were pure overhead. The
-    * only cluster work per pair is the two row counts.
+    * schemas are metadata already resident on the driver. The only
+    * cluster work per pair is the two row counts (plus whatever jobs
+    * `readFn` runs, e.g. `inferSchema`).
+    *
+    * Pairs run CONCURRENTLY on a pool of `min(pairs, defaultParallelism)`
+    * threads created for this call and shut down before it returns: each
+    * pair's jobs are small, so run one at a time the driver sat idle
+    * between them. The pool threads inherit the caller's Spark local
+    * properties (job group, scheduler pool) and active session. Rows come
+    * back in input-pair order; a failing pair rethrows its error wrapped
+    * with that pair's paths, and the pairs not yet started are dropped.
+    *
+    * Concurrency contract: `readFn` is called from several threads at
+    * once and must be thread-safe. `spark.read` and
+    * [[graft.sources.Xlsx.read]] are.
     */
   def pairCompare(spark: SparkSession, pairs: Seq[(String, String, String)],
                   readFn: String => DataFrame): DataFrame = {
     import spark.implicits._
-    val rows = pairs.map { case (stdName, oldPath, newPath) =>
+    def compare(stdName: String, oldPath: String, newPath: String): PairRow = {
       val (oldDf, newDf) = (readFn(oldPath), readFn(newPath))
       val (oc, nc, delta) = rowDiff(oldDf, newDf)
       def types(s: StructType) =
@@ -81,6 +99,31 @@ object SchemaDiff {
         if (added.isEmpty) null else added,
         if (removed.isEmpty) null else removed,
         if (typeChanged.isEmpty) null else typeChanged)
+    }
+    val rows = if (pairs.isEmpty) Seq.empty else {
+      val threads = new java.util.concurrent.atomic.AtomicInteger()
+      // pool threads are created by submit() on THIS thread, so they
+      // inherit its InheritableThreadLocals (Spark local properties and
+      // active session); the global ExecutionContext's threads would not
+      val pool = Executors.newFixedThreadPool(
+        math.min(pairs.size, spark.sparkContext.defaultParallelism),
+        (r: Runnable) => {
+          val t = new Thread(r, s"graft-pair-compare-${threads.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        })
+      try {
+        val futures = pairs.map { case (s, o, n) =>
+          pool.submit(new Callable[PairRow] { def call(): PairRow = compare(s, o, n) })
+        }
+        futures.zip(pairs).map { case (f, (s, o, n)) =>
+          try f.get() catch {
+            case e: ExecutionException =>
+              throw new RuntimeException(
+                s"pairCompare failed on '$s' ($o vs $n): ${e.getCause}", e.getCause)
+          }
+        }
+      } finally pool.shutdownNow()
     }
     rows.toDF("std_name", "old_rows", "new_rows", "row_change",
       "added_cols", "removed_cols", "type_changed_cols")

@@ -219,8 +219,9 @@ object GlobalRank {
     require(groupCols.nonEmpty, "withGroupedRank needs group columns")
     val taken = df.columns.toSet
     require(!taken(rankCol), s"input already has a '$rankCol' column")
-    require(Seq("__gr_d", "__gr_b", "__gr_b2", "__gr_c", "__gr_off")
-      .forall(!taken(_)), "input uses GlobalRank's reserved __gr_* names")
+    require((Seq("__gr_d", "__gr_b", "__gr_b2", "__gr_c", "__gr_off") ++
+      groupCols.map(g => s"__gr_g_$g")).forall(!taken(_)),
+      "input uses GlobalRank's reserved __gr_* names")
     val spark = df.sparkSession
     val p =
       if (numPartitions > 0) numPartitions

@@ -148,6 +148,9 @@ object Metrics {
       .select(col("key"),
         ((col("y2") - col("y1")).cast("double") /
           (col("x2") - col("x1")).cast("double")).as("sl"))
+      // a null y gives a null slope: drop it, as the histogram path does,
+      // so both sides of the key gate agree on n_pairs and the median
+      .filter(col("sl").isNotNull)
     val w = Window.partitionBy("key").orderBy("sl")
     pairs.withColumn("rn", row_number().over(w))
       .withColumn("n_pairs", count(lit(1)).over(Window.partitionBy("key")))

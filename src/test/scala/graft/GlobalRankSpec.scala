@@ -159,6 +159,15 @@ class GlobalRankSpec extends SparkFunSuite {
     sameRows(got, want)
   }
 
+  test("withGroupedRank rejects a caller column named __gr_g_<group>") {
+    val df = spark.range(10).select(col("id"),
+      pmod(col("id"), lit(2)).as("g"), lit(1).as("__gr_g_g"))
+    val e = intercept[IllegalArgumentException] {
+      GlobalRank.withGroupedRank(df, Seq("g"), Seq(col("id")), "r")
+    }
+    assert(e.getMessage.contains("reserved"))
+  }
+
   test("withGroupedRank with a string lead key falls back to the window") {
     val df = spark.range(400).select(col("id"),
       pmod(col("id"), lit(3)).cast("string").as("g"),

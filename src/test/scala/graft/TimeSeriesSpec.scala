@@ -153,6 +153,25 @@ class TimeSeriesSpec extends SparkFunSuite {
     assert(got.map(_._1) === Seq(0L, 1L, 2L, 3L, 5L)) // k=4 absent
   }
 
+  test("theilSen: a null y drops its pairs on both sides of the key gate") {
+    import spark.implicits._
+    // off-contract input: a null y gives null slopes. The histogram path
+    // filters them; the windowed fallback (past the key gate) must too,
+    // or n_pairs and the median flip with the number of keys
+    val series = (
+      (0 until 9).map(x => (0L, x.toLong, Option(2L * x + (x % 2)))) ++
+      (0 until 6).map(x => (1L, x.toLong, if (x == 3) None else Some(x * x.toLong))) ++
+      Seq((2L, 0L, None), (2L, 1L, Some(4L)))
+    ).toDF("key", "x", "y")
+    val got = graft.operators.Metrics.theilSen(series)
+      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    val want = graft.operators.Metrics.theilSenWindowed(series)
+      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    assert(got === want)
+    // key 1: 15 pairs, 5 touch x = 3; key 2's only pair is null
+    assert(got.map(r => r._1 -> r._2) === Seq(0L -> 36L, 1L -> 10L))
+  }
+
   test("theilSenSampled: long-series slope converges to the exact slope") {
     import spark.implicits._
     // 3000 points/key = ~4.5M exact pairs; slope 2 plus a bounded
