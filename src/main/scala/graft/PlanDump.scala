@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for declared queries to text files —
   * the optimization-round evidence artifacts (plans/rNN/<q>_before.txt /
-  * _after.txt). Mirrors the Bench session config (same master/shuffle
-  * partitions/UTC) so the captured plans are the ones the bench runs.
+  * _after.txt). Uses the Bench session config ([[LocalSession]]) so the
+  * captured plans are the ones the bench runs.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> [q1,q2,...]
   *   outDir  — directory for the .txt files (created if missing)
@@ -21,14 +20,7 @@ object PlanDump {
       Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
     else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession.getOrCreate("PlanDump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => only.forall(_(kv._1)))

@@ -266,15 +266,8 @@ object ReplicateCorpus {
     require(fat == 0 || mult <= 800,
       s"fat mode supports mult <= 800 (got $mult): replica ids would " +
         "collide with the fat-doc id range")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.getOrCreate("ReplicateCorpus")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     Files.createDirectories(Paths.get(dst))
 
     // key columns to offset per table; everything else passes through

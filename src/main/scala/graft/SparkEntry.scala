@@ -12,7 +12,7 @@ import graft.queries._
   */
 object SparkEntry {
 
-  private val registry: Seq[Q] =
+  private[graft] val registry: Seq[Q] =
     Relational.all ++ IngestQ.all ++ TextQ.all ++ CorpusQ.all ++
       ScaleQ.all ++ StreamQ.all
 
@@ -25,11 +25,8 @@ object SparkEntry {
     registry.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Semantically-equivalent SQL where the op is
-    * SQL-expressible; generated golden VALUES oracles (graft.queries.
-    * Golden) for the deterministic sketch/ANN/stub ops that aren't.
+    * the same parquet tables.
     */
   def oracleSql: Map[String, String] =
-    Golden.sql ++
-      registry.collect { case Q(n, _, Some(sql)) => n -> sql }.toMap
+    registry.collect { case Q(n, _, Some(sql)) => n -> sql }.toMap
 }

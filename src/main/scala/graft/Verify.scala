@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,14 +7,7 @@ object Verify {
     // args: sfDir outDir [comma-separated query filter (local iteration)]
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.getOrCreate("Verify")
     // SPARK_GRAFT_SESSION_CONF="k=v,k2=v2": extra session confs for
     // alternate-path gate runs (e.g. spark.graft.stateApi=tws puts the
     // stateful stream_* queries through the Spark 4 transformWithState

@@ -1,6 +1,7 @@
 package graft.operators
 
 import java.nio.file.{Files, Path}
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.DataFrame
 
 /** Stage materialization for multi-branch operator plans.
@@ -64,18 +65,23 @@ object Stage {
     out.result()
   }
 
+  // Best-effort delete of one tracked directory: a local walk, or the
+  // Hadoop FileSystem for `spark.graft.stageDir` stages.
+  private def delete(dir: String, isLocal: Boolean,
+                     conf: => Configuration): Unit =
+    try {
+      if (isLocal) {
+        Files.walk(Path.of(dir)).sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => { val _ = Files.deleteIfExists(f) })
+      } else {
+        val p = new org.apache.hadoop.fs.Path(dir)
+        val _ = p.getFileSystem(conf).delete(p, true)
+      }
+    } catch { case _: Throwable => }
+
   sys.addShutdownHook {
     tracked.forEach { case (dir, isLocal) =>
-      try {
-        if (isLocal) {
-          Files.walk(Path.of(dir)).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { val _ = Files.deleteIfExists(f) })
-        } else {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val _ = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            .delete(p, true)
-        }
-      } catch { case _: Throwable => }
+      delete(dir, isLocal, new Configuration())
     }
   }
 
@@ -88,19 +94,10 @@ object Stage {
     * and restages.
     */
   def purge(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
     var e = tracked.poll()
     while (e != null) {
-      val (dir, isLocal) = e
-      try {
-        if (isLocal) {
-          Files.walk(Path.of(dir)).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { val _ = Files.deleteIfExists(f) })
-        } else {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val _ = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-        }
-      } catch { case _: Throwable => }
+      delete(e._1, e._2, conf)
       e = tracked.poll()
     }
     purgeListeners.forEach(f => f())

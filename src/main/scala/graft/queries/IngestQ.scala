@@ -1100,7 +1100,7 @@ object IngestQ {
     // src_evolve [EXT]: schema-evolution read — two parquet "versions"
     // with drifted schemas (v2 adds a column) union under mergeSchema,
     // old rows null-filled; the everyday shape of reading a years-deep
-    // versioned lake. Golden VALUES oracle.
+    // versioned lake.
     Q("src_evolve",
       (s, d) => {
         import s.implicits._

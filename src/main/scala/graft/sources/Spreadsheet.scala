@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, input_file_block_start,
+  input_file_name}
 
 /** Excel source (SURVEY.md §2.1 `src_xlsx`; the reference reads
   * `read_xlsx(skip = 1)`, `assess_changes.qmd:132,138`).
@@ -23,12 +25,20 @@ trait SpreadsheetReader {
 object CsvTwinReader extends SpreadsheetReader {
   def read(spark: SparkSession, path: String, skip: Int): DataFrame = {
     import spark.implicits._
-    // per-file line index via zipWithIndex inside each file's partition
-    // order (spark.read.text preserves line order per file)
-    val lines = spark.read.textFile(path)
-    val kept = lines.mapPartitions { it => it.zipWithIndex.collect {
-      case (l, i) if i >= skip => l
-    } }
+    // Skip the first `skip` lines of each FILE, not of each partition: a
+    // large file is split across partitions, and only its split at
+    // offset 0 holds its first lines (in file order). The skipped lines
+    // must fall in that split, which holds at least
+    // min(maxPartitionBytes, openCostInBytes) bytes of the file.
+    val lines = spark.read.text(path).select(col("value"),
+      input_file_name(), input_file_block_start()).as[(String, String, Long)]
+    val kept = lines.mapPartitions { it =>
+      val seen = scala.collection.mutable.Map.empty[String, Int]
+        .withDefaultValue(0)
+      it.filter { case (_, file, start) =>
+        start != 0L || { seen(file) += 1; seen(file) > skip }
+      }.map(_._1)
+    }
     spark.read.option("header", "true").option("inferSchema", "true")
       .csv(kept)
   }

@@ -11,10 +11,7 @@ import graft.operators.Bpe
   */
 object BpeProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession.getOrCreate("BpeProbe")
     import spark.implicits._
     // ~1M distinct words, zipf-ish frequencies via repetition of the
     // hot head: "docs" of deterministic pseudo-words
